@@ -133,12 +133,10 @@ object Bench {
     !name.startsWith("x_stream") && {
       try {
         var scan = true
-        def visit(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
+        graft.tools.PlanWalk.foreach(df.queryExecution.sparkPlan,
+            _.inputPlan, _ => false) { p =>
           if (shuffleImplying(p.getClass.getSimpleName)) scan = false
-          p.children.foreach(visit)
-          p.subqueries.foreach(visit)
         }
-        visit(df.queryExecution.sparkPlan)
         scan
       } catch { case _: Throwable => false }
     }
@@ -594,7 +592,9 @@ object Bench {
         System.err.println(
           s"[bench] heap pressure (${heapMb}MB > ${hatchMb}MB): clearing ALL caches including session tier")
         hatchEvents += name -> heapMb.toDouble
-        hatchPending = true
+        // a later session-tier build is a post-hatch REbuild only if this
+        // release actually dropped something
+        hatchPending ||= CacheScope.sessionLiveCount > 0
         CacheScope.releaseSession()
         spark.sharedState.cacheManager.clearCache()
         System.gc()
@@ -984,11 +984,10 @@ object Bench {
     System.err.println(s"[bench] full timings -> ${outFile.toAbsolutePath}")
     // stderr table: per-gate streaming throughput + peak state size (the
     // PLANS evidence row for provider/state comparisons)
-    val sm = graft.queries.StreamMetrics.summary
+    val sm = graft.queries.StreamMetrics.summaryLines
     if (sm.nonEmpty) {
       System.err.println("[bench] streaming gates: rows/sec, peak state rows, peak state bytes")
-      sm.foreach { case (n, rps, sr, sb) =>
-        System.err.println(f"[bench]   $n%-32s rps=$rps%10.1f stateRows=$sr%9d stateBytes=$sb%12d") }
+      sm.foreach(l => System.err.println(s"[bench]   $l"))
     }
     // probe_s rides on the stdout headline too (16 chars — the judge can
     // normalize the driver-recorded BENCH_r{N}.json without the file)

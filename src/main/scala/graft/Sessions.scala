@@ -60,8 +60,8 @@ object Sessions {
     * key to keep `numRowsTotal` exact — ~2x write amplification on
     * write-heavy state, purely for a metric. Default OFF here since
     * round 22 (A/B on the full gate board: see OPTIMIZATION_r22.md);
-    * the cost is that StreamingQueryProgress reports numRowsTotal = -1,
-    * so the bench's peak-state-rows telemetry reads -1 under the
+    * the cost is that StreamingQueryProgress's numRowsTotal counts
+    * nothing, so the bench's peak-state-rows telemetry reads n/a under the
     * default — re-enable via SPARK_GRAFT_ROCKSDB_TRACKROWS=1 when a
     * round needs state-size evidence (rolls freeze under the explicit
     * knob like every execution-shaping env var). */

@@ -1,28 +1,14 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import scala.jdk.CollectionConverters._
 
-/** Declarative pipeline specs: a JSON document compiled to a [[Pipeline]]
-  * through the [[StandardOps]] registry — the engine's equivalent of the
-  * reference's morphline config file (HOCON is a JSON superset, so a
-  * morphline block converts mechanically to this shape):
-  *
-  * {{{
-  * { "id": "readjson",
-  *   "commands": [
-  *     { "command": "readJson", "field": "value",
-  *       "schema": "firstName STRING, age INT" },
-  *     { "command": "extractJsonPaths", "paths": "first_name:firstName" } ] }
-  * }}}
-  *
-  * Compilation happens once on the driver (MorphlineTransform.java:166-195
-  * analogue); the result is a single composed Catalyst plan.
+/** Declarative pipeline specs: a morphline config file (HOCON, the
+  * reference's config language) compiled to a [[Pipeline]] through the
+  * [[StandardOps]] registry. Compilation happens once on the driver
+  * (MorphlineTransform.java:166-195 analogue); the result is a single
+  * composed Catalyst plan.
   */
 object PipelineSpec {
-
-  private val mapper = new ObjectMapper()
 
   /** Compile a morphline out of a real HOCON config file — the reference's
     * actual query language (`morphlines : [ { id, importCommands, commands :
@@ -76,8 +62,9 @@ object PipelineSpec {
       else scalarOf(v)
 
     // Morphline parsers replace the attachment body in place
-    // (Fields.ATTACHMENT_BODY); the JSON-spec path defaults to named output
-    // columns instead, so the in-place defaults are injected only here.
+    // (Fields.ATTACHMENT_BODY); the registry's own defaults (the
+    // StandardOps.compile path) are named output columns instead, so the
+    // in-place defaults are injected only here.
     val inPlace = Map(
       "readJson" -> Map("field" -> "_attachment_body",
         "outputField" -> "_attachment_body"),
@@ -111,8 +98,7 @@ object PipelineSpec {
       val (name, cfgVal) = (entries.head.getKey, entries.head.getValue)
       name match {
         // control-flow commands hold nested command lists, not scalar
-        // config — compile them recursively (same semantics as fromJson's
-        // if/tryRules/pipe handling)
+        // config — compile them recursively
         case "if" =>
           val cond = org.apache.spark.sql.functions.expr(
             Option(cfgVal.get("condition")).map(_.asText).getOrElse(
@@ -198,69 +184,4 @@ object PipelineSpec {
     fromHocon(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8"), morphlineId, registry,
       settings, env)
-
-  def fromJson(json: String, registry: OpRegistry = StandardOps.registry): Pipeline = {
-    val root = mapper.readTree(json)
-    val id = Option(root.get("id")).map(_.asText).getOrElse("pipeline")
-    Pipeline(id, compileCommands(root.get("commands"), registry))
-  }
-
-  private def compileCommands(commands: com.fasterxml.jackson.databind.JsonNode,
-                              registry: OpRegistry): Seq[Op] = {
-    require(commands != null && commands.isArray,
-      "pipeline spec needs a 'commands' array")
-    commands.elements.asScala.toSeq.map { node =>
-      val name = Option(node.get("command")).map(_.asText).getOrElse(
-        throw new IllegalArgumentException(s"command entry missing 'command': $node"))
-      name match {
-        // control-flow commands with nested sub-pipelines (reference
-        // `if {conditions then else}` / `tryRules {rules}` blocks)
-        case "if" =>
-          val cond = org.apache.spark.sql.functions.expr(
-            node.get("condition").asText)
-          val thenOps = compileCommands(node.get("then"), registry)
-          val elseOps = Option(node.get("else"))
-            .map(compileCommands(_, registry)).getOrElse(Nil)
-          graft.ops.ControlOps.ifThenElse(cond,
-            df => thenOps.foldLeft(df)((d, op) => op(d)),
-            df => elseOps.foldLeft(df)((d, op) => op(d)))
-        case "tryRules" =>
-          val rules = node.get("rules").elements.asScala.toSeq.map { rule =>
-            val cond = org.apache.spark.sql.functions.expr(
-              rule.get("condition").asText)
-            val ops = compileCommands(rule.get("commands"), registry)
-            (cond, (df: org.apache.spark.sql.DataFrame) =>
-              ops.foldLeft(df)((d, op) => op(d)))
-          }
-          graft.ops.ControlOps.tryRules(rules,
-            Option(node.get("catchAll")).map { ca =>
-              val ops = compileCommands(ca, registry)
-              (df: org.apache.spark.sql.DataFrame) =>
-                ops.foldLeft(df)((d, op) => op(d))
-            })
-        case "pipe" =>
-          Op.pipe(Pipeline(
-            Option(node.get("id")).map(_.asText).getOrElse("nested"),
-            compileCommands(node.get("commands"), registry)))
-        // JSON spelling of the Kite nested form:
-        // {"command": "not", "nested": {"command": "equals", ...}}
-        case "not" if node.has("nested") =>
-          graft.ops.ControlOps.notOp(
-            compileCommands(mapper.createArrayNode().add(node.get("nested")),
-              registry).head)
-        case _ =>
-          val cfg = node.properties.asScala
-            .filter(_.getKey != "command")
-            .map(e => e.getKey -> (
-              // arrays join like the HOCON flattener — unit separator, so
-              // a Kite value-list element containing a comma is not mangled
-              // (asText on an array node is "" — would drop the list)
-              if (e.getValue.isArray)
-                e.getValue.elements.asScala.map(_.asText).mkString("\u001F")
-              else e.getValue.asText))
-            .toMap
-          registry.build(name, cfg)
-      }
-    }
-  }
 }

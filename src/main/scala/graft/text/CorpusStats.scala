@@ -30,7 +30,7 @@ object CorpusStats {
     * over the full sf0.1 token stream; property-spec'd incl. 1-char and
     * digit tokens) and ~1.45× faster through the encode chain — group-ref
     * regex substitution per character was the scan stage's hot spot
-    * (guide §1.2 per-task work; measured r21, SpreadBench).
+    * (guide §1.2 per-task work; measured in round 21, OPTIMIZATION_r21.md).
     */
   private[graft] def charSpread(tok: Column): Column =
     trim(array_join(split(tok, ""), "  "))
@@ -570,92 +570,13 @@ object CorpusStats {
     * count, then per-round aggregations over the vocabulary-sized
     * relation (pair counts + symbol counts are both map-side
     * combinable), per-round lineage truncation.
+    *
+    * `forceDecimalTier` pins the DECIMAL(38,0) scoring tier for parity
+    * testing (the tier engages automatically when the corpus exceeds the
+    * Long tier's √Long.Max symbol bound).
     */
-  def wordpieceTrain(df: DataFrame, textCol: String, steps: Int): DataFrame =
-    wordpieceTrain(df, textCol, steps, forceDecimalTier = false)
-
-  /** How each WordPiece merge round attaches the two symbol counts to
-    * the pair-count relation (r21 VERDICT item 1 — the per-round double
-    * `broadcast()` was the round's one suspect-harmful change: the
-    * driver measured 3.05 → 4.63 s and the 8-core run BEAT the 32-core
-    * run, consistent with per-round broadcast-build jobs dominating):
-    *  - "collect":   ONE vocabulary-bounded job collects symCnt
-    *                 (≤ |alphabet| + merges rows BY CONSTRUCTION — the
-    *                 same rows a broadcast build would pull to the
-    *                 driver anyway) into a LocalRelation; both score
-    *                 joins then broadcast driver-local rows with NO
-    *                 per-side build job and symCnt is computed ONCE per
-    *                 round instead of once per broadcast.
-    *  - "broadcast": explicit broadcast() on both sides (r21 shape).
-    *  - "plain":     no hint (r20 shape) — the planner auto-broadcasts
-    *                 at round 1 (the materialized vocab cache carries
-    *                 exact stats) but falls back to sort-merge from
-    *                 round 2 on, where the lineage-truncating LogicalRDD
-    *                 wrap erases the stats.
-    * Measured A/B (graft.tools.WordpieceBench, sf0.1, interleaved
-    * iterations, round 22): 32 cores — broadcast 1.94 s median / plain
-    * 1.92 / collect 2.32; 8 cores — broadcast 1.57 / plain 1.66 /
-    * collect 1.75. "broadcast" wins or ties at both core counts, so the
-    * r21 change STANDS; the driver's 4.63 s was host contention (the
-    * same commit read 1.35 s at the round-22 open). The 8-core-faster-
-    * than-32 pattern holds for ALL three strategies (1.57 vs 1.94) —
-    * it is the fixed task overhead of vocabulary-sized rounds at 32
-    * shuffle partitions, not a broadcast pathology. Per-round plan
-    * dumps: plans/r22/t_wordpiece_train_round_{strategy}.txt. */
-  private[graft] val WordpieceScoreJoinDefault = "broadcast"
-
-  /** As [[wordpieceTrain]]; `forceDecimalTier` pins the DECIMAL(38,0)
-    * scoring tier for parity testing (the tier engages automatically
-    * when the corpus exceeds the Long tier's √Long.Max symbol bound). */
   def wordpieceTrain(df: DataFrame, textCol: String, steps: Int,
-                     forceDecimalTier: Boolean): DataFrame =
-    wordpieceTrain(df, textCol, steps, forceDecimalTier,
-      WordpieceScoreJoinDefault)
-
-  /** The per-round argmax frame: pair counts over the current vocab
-    * segmentation, scored against the symbol counts via `scoreJoin`
-    * (see [[WordpieceScoreJoinDefault]]). Shared by the training loop
-    * and the standalone A/B / plan-dump tooling so the measured frame
-    * IS the trained frame. */
-  private[graft] def wordpieceRoundFrame(vocab: DataFrame, scoreExpr: String,
-                                         scoreJoin: String): DataFrame = {
-    val spark = vocab.sparkSession
-    val syms = vocab.select(col("wc"), split(col("seq"), "  ").as("syms"))
-    val symCntDf = syms
-      .select(col("wc"), explode(col("syms")).as("sym"))
-      .groupBy(col("sym")).agg(sum(col("wc")).as("sc"))
-    val symCnt = scoreJoin match {
-      case "collect" =>
-        // one vocabulary-bounded job (the relation is ≤ |alphabet| +
-        // merges-so-far rows by construction); the LocalRelation's
-        // broadcast costs no job and no second symCnt computation
-        val rows = symCntDf.collect()
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          symCntDf.schema)
-      case _ => symCntDf
-    }
-    def side(keyAs: String, cntAs: String) = {
-      val p = symCnt.select(col("sym").as(keyAs), col("sc").as(cntAs))
-      if (scoreJoin == "plain") p else broadcast(p)
-    }
-    syms
-      .filter(size(col("syms")) >= 2)
-      .select(col("wc"), explode(expr(
-        "transform(sequence(1, size(syms) - 1), i -> struct(syms[i - 1] AS a, syms[i] AS b))"))
-        .as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum(col("wc")).as("cnt"))
-      .join(side("a", "sa"), Seq("a"))
-      .join(side("b", "sb"), Seq("b"))
-      .select(col("a"), col("b"), col("cnt"),
-        expr(scoreExpr).cast("long").as("score_x9"))
-      .orderBy(col("score_x9").desc, col("a"), col("b"))
-      .limit(1)
-  }
-
-  private[graft] def wordpieceTrain(df: DataFrame, textCol: String,
-                                    steps: Int, forceDecimalTier: Boolean,
-                                    scoreJoin: String): DataFrame = {
+                     forceDecimalTier: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     val Scale = 1000000000L
     var vocab = graft.CacheScope.cache(
@@ -693,7 +614,7 @@ object CorpusStats {
     var step = 1
     var exhausted = false
     while (step <= steps && !exhausted) {
-      val top = wordpieceRoundFrame(vocab, scoreExpr, scoreJoin).collect()
+      val top = wordpieceRoundFrame(vocab, scoreExpr).collect()
       if (top.isEmpty) exhausted = true
       else {
         val (a, b, cnt, sc) = (top(0).getString(0), top(0).getString(1),
@@ -712,6 +633,34 @@ object CorpusStats {
     merges.toSeq.toDF("step", "a", "b", "merged", "cnt", "score_x9")
       .select(col("step").cast("long").as("step"), col("a"), col("b"),
         col("merged"), col("cnt"), col("score_x9"))
+  }
+
+  /** The per-round argmax frame: pair counts over the current vocab
+    * segmentation, scored against broadcast symbol counts (≤ |alphabet| +
+    * merges rows; unhinted, rounds 2+ fall back to sort-merge because the
+    * LogicalRDD wrap erases the cache's stats). The round-22 A/B in
+    * OPTIMIZATION_r22.md kept this over a plain or a collect join. */
+  private def wordpieceRoundFrame(vocab: DataFrame,
+                                  scoreExpr: String): DataFrame = {
+    val syms = vocab.select(col("wc"), split(col("seq"), "  ").as("syms"))
+    val symCnt = syms
+      .select(col("wc"), explode(col("syms")).as("sym"))
+      .groupBy(col("sym")).agg(sum(col("wc")).as("sc"))
+    def side(keyAs: String, cntAs: String) =
+      broadcast(symCnt.select(col("sym").as(keyAs), col("sc").as(cntAs)))
+    syms
+      .filter(size(col("syms")) >= 2)
+      .select(col("wc"), explode(expr(
+        "transform(sequence(1, size(syms) - 1), i -> struct(syms[i - 1] AS a, syms[i] AS b))"))
+        .as("p"))
+      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+      .agg(sum(col("wc")).as("cnt"))
+      .join(side("a", "sa"), Seq("a"))
+      .join(side("b", "sb"), Seq("b"))
+      .select(col("a"), col("b"), col("cnt"),
+        expr(scoreExpr).cast("long").as("score_x9"))
+      .orderBy(col("score_x9").desc, col("a"), col("b"))
+      .limit(1)
   }
 
   /** Per-document piece counts under a learned WordPiece vocabulary:

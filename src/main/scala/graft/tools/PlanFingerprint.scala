@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Deterministic physical-plan signature for the plan-regression gate
   * (r15 VERDICT item 5): bench noise cannot catch a plan regression — an
@@ -33,7 +33,11 @@ object PlanFingerprint {
   def of(df: DataFrame): String = {
     val counts = scala.collection.mutable.Map.empty[String, Int]
     val scans = scala.collection.mutable.ArrayBuffer.empty[String]
-    def visit(p: SparkPlan): Unit = {
+    // Enter every cache consumer (ADVICE r21: InMemoryTableScan hides the
+    // parquet scans of q11, q17, p_pack_* and the fused DSIR/NB paths; the
+    // fixture counts a cached subtree once per scan), unwrapping cached
+    // AQE plans to inputPlan for the same stability as sparkPlan itself.
+    PlanWalk.foreach(df.queryExecution.sparkPlan, _.inputPlan, _ => true) { p =>
       p match {
         case f: FileSourceScanExec =>
           val table = f.relation.location.rootPaths.headOption
@@ -41,29 +45,11 @@ object PlanFingerprint {
           val cols = f.requiredSchema.fieldNames.mkString("+")
           val pushed = f.metadata.getOrElse("PushedFilters", "[]")
           scans += s"$table{cols=$cols,pushed=$pushed}"
-        // Walk INTO cached relations (ADVICE r21): queries whose scans
-        // moved inside a CacheScope persist (q11, q17, p_pack_*, the
-        // fused DSIR/NB paths) would otherwise lose their column-pruning
-        // and pushdown assertions — InMemoryTableScan hides the
-        // underlying parquet scan, so a pruning regression inside the
-        // cached subtree went undetected. The cached plan may be wrapped
-        // in AdaptiveSparkPlanExec (a leaf until executed): unwrap via
-        // inputPlan — the pre-AQE shape, same stability rationale as
-        // fingerprinting sparkPlan itself.
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          im.relation.cachedPlan match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              visit(a.inputPlan)
-            case cp => visit(cp)
-          }
         case _ => ()
       }
       val cls = p.getClass.getSimpleName
       if (interesting(cls)) counts(cls) = counts.getOrElse(cls, 0) + 1
-      p.children.foreach(visit)
-      p.subqueries.foreach(visit) // scalar/IN subqueries shuffle too
     }
-    visit(df.queryExecution.sparkPlan)
     val c = counts.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
     (c +: scans.sorted.toSeq).mkString(" | ")
   }

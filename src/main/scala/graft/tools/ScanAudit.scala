@@ -11,64 +11,37 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   * scan; plan cost lives in the run). Output: one TSV row per query on
   * stdout. Run at sf0.001 — plan SHAPE is what's audited.
   *
-  * Counting is a TREE WALK, not a plan-string grep (round 22): the
-  * string form prints every cached relation's child plan once PER
-  * CONSUMER, so a subtree that was deliberately cached to run once
-  * (q11/q17/p_pack_* after r21) still read as a duplicate scan — the
-  * audit flagged exactly the rows its previous round had fixed. The
-  * walk visits each DISTINCT InMemoryRelation's cachedPlan once (that
-  * is what executes: one materialization per cache, however many
-  * consumers), so `dup_table_scans` now counts only files genuinely
-  * scanned more than once per invocation. `inmem` counts
-  * InMemoryTableScan consumers; `cached_rels` the distinct relations.
+  * Counting is a tree walk ([[PlanWalk]]), not a plan-string grep: the
+  * string form prints a cached relation's child plan once PER CONSUMER,
+  * so a subtree deliberately cached to run once still read as a duplicate
+  * scan. The walk enters each DISTINCT InMemoryRelation's cachedPlan once
+  * (one materialization per cache, however many consumers), so
+  * `dup_table_scans` counts only files genuinely scanned more than once
+  * per invocation. `inmem` counts InMemoryTableScan consumers;
+  * `cached_rels` the distinct relations.
   *
   * Usage: sbt "runMain graft.tools.ScanAudit [dataDir] [prefix]"
   */
 object ScanAudit {
 
-  final case class Counts(var ex: Int = 0, var bc: Int = 0, var smj: Int = 0,
-                          var bnl: Int = 0, var im: Int = 0,
-                          var cachedRels: Int = 0,
-                          files: scala.collection.mutable.Map[String, Int] =
-                            scala.collection.mutable.Map.empty)
+  private val counted = Seq("ShuffleExchangeExec", "BroadcastExchangeExec",
+    "SortMergeJoinExec", "BroadcastNestedLoopJoinExec", "InMemoryTableScanExec")
 
-  /** Walk `p`, visiting each distinct InMemoryRelation's cachedPlan once
-    * (keyed on the relation's cache builder identity — two scans of the
-    * same cache share storage, so its subtree executes once). */
-  def tally(p: SparkPlan, c: Counts,
-            seen: scala.collection.mutable.Set[AnyRef]): Unit = {
-    p match {
+  /** The TSV columns after `query` for plan `p`: each cached relation is
+    * entered once, keyed on its cache builder identity, and
+    * AdaptiveSparkPlanExec unwraps to initialPlan, the first shape that
+    * carries exchanges. */
+  def tally(p: SparkPlan): Seq[Int] = {
+    val files = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val ops = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val rels = scala.collection.mutable.Set.empty[AnyRef]
+    PlanWalk.foreach(p, _.initialPlan, im => rels.add(im.relation.cacheBuilder)) {
       case f: FileSourceScanExec =>
-        val path = f.relation.location.rootPaths.headOption
-          .map(_.toString).getOrElse("?")
-        c.files(path) = c.files.getOrElse(path, 0) + 1
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        // a leaf until executed; initialPlan (inputPlan +
-        // EnsureRequirements) is the first shape that carries exchanges
-        tally(a.initialPlan, c, seen)
-      case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        c.im += 1
-        val rel = im.relation.cacheBuilder
-        if (!seen.contains(rel)) {
-          seen += rel
-          c.cachedRels += 1
-          im.relation.cachedPlan match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              tally(a.inputPlan, c, seen)
-            case cp => tally(cp, c, seen)
-          }
-        }
-      case _ => ()
+        files(f.relation.location.rootPaths.headOption.map(_.toString).getOrElse("?")) += 1
+      case n => ops(n.getClass.getSimpleName) += 1
     }
-    p.getClass.getSimpleName match {
-      case "ShuffleExchangeExec" => c.ex += 1
-      case "BroadcastExchangeExec" => c.bc += 1
-      case "SortMergeJoinExec" => c.smj += 1
-      case "BroadcastNestedLoopJoinExec" => c.bnl += 1
-      case _ => ()
-    }
-    p.children.foreach(tally(_, c, seen))
-    p.subqueries.foreach(tally(_, c, seen))
+    Seq(files.values.sum, files.count(_._2 > 1), files.values.maxOption.getOrElse(0)) ++
+      counted.map(ops) :+ rels.size
   }
 
   def main(args: Array[String]): Unit = {
@@ -85,13 +58,7 @@ object ScanAudit {
          if !name.startsWith("x_stream") && name.startsWith(prefix)) {
       try {
         val df = fn(spark, dir)
-        val c = Counts()
-        tally(df.queryExecution.executedPlan, c,
-          scala.collection.mutable.Set.empty[AnyRef])
-        val scans = c.files.values.sum
-        val dup = c.files.count(_._2 > 1)
-        val dupMax = if (c.files.isEmpty) 0 else c.files.values.max
-        println(s"$name\t$scans\t$dup\t$dupMax\t${c.ex}\t${c.bc}\t${c.smj}\t${c.bnl}\t${c.im}\t${c.cachedRels}")
+        println((name +: tally(df.queryExecution.executedPlan)).mkString("\t"))
       } catch { case e: Throwable =>
         // padded to the 10-column header so TSV parsers stay aligned
         // across an audit containing a failed query (ADVICE r21)

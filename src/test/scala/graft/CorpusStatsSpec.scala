@@ -454,23 +454,28 @@ class CorpusStatsSpec extends SparkSpec {
       s"$out vs ($d1, $d2)")
   }
 
-  test("wordpieceTrain: identical merge table under every score-join strategy (r22)") {
-    // The per-round argmax frame is parameterized by how the symbol
-    // counts attach (collect→LocalRelation / explicit broadcast / plain
-    // join — r22 A/B, graft.tools.WordpieceBench); the learned artifact
-    // must be bit-identical under all three, including tie rounds and
-    // early exhaustion.
+  test("wordpieceTrain: exact merge table through tie rounds and early exhaustion") {
+    // Pinned table (all three round-22 score-join strategies produced it
+    // before the broadcast join became the only one). Round 3 is a tie
+    // — (h,e) and (t,h) both score 4e9/(4·4) — broken on (a, b); the run
+    // asks for 12 merges and exhausts after 10, when every word is one
+    // symbol.
     val df = Seq((1L, "qu qu the the the the abab aab"), (2L, "cd bbbbb"))
       .toDF("doc_id", "text")
-    val tables = Seq("collect", "broadcast", "plain").map { st =>
-      st -> CorpusStats
-        .wordpieceTrain(df, "text", 6, forceDecimalTier = false, st)
-        .orderBy("step")
-        .as[(Long, String, String, String, Long, Long)].collect().toSeq
-    }
-    assert(tables.head._2.nonEmpty)
-    for ((st, t) <- tables.tail)
-      assert(t == tables.head._2, s"strategy $st diverged from collect")
+    val table = CorpusStats.wordpieceTrain(df, "text", 12)
+      .orderBy("step")
+      .as[(Long, String, String, String, Long, Long)].collect().toSeq
+    assert(table == Seq(
+      (1L, "c", "d", "cd", 1L, 1000000000L),
+      (2L, "q", "u", "qu", 2L, 500000000L),
+      (3L, "h", "e", "he", 4L, 250000000L),
+      (4L, "t", "he", "the", 4L, 250000000L),
+      (5L, "a", "b", "ab", 3L, 93750000L),
+      (6L, "a", "ab", "aab", 1L, 333333333L),
+      (7L, "ab", "ab", "abab", 1L, 250000000L),
+      (8L, "b", "b", "bb", 4L, 160000000L),
+      (9L, "bb", "b", "bbb", 1L, 500000000L),
+      (10L, "bb", "bbb", "bbbbb", 1L, 1000000000L)))
   }
 
   test("wordpieceTrain ranks by likelihood, not frequency (qu beats the)") {

@@ -11,11 +11,8 @@ import org.apache.spark.sql.functions._
 class HoconPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private val refDir =
-    "/root/reference/src/test/resources/com/github/epheatt/kafka/connect/morphlines"
   private def conf(name: String): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$refDir/$name")), "UTF-8")
+    ReferenceConf.read(ReferenceConf.testConf(name))
 
   private val personJson =
     """{"firstName": "example", "lastName": "user", "email": "example.user@example.com", "age": 27}"""

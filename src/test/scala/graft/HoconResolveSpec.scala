@@ -13,9 +13,8 @@ class HoconResolveSpec extends AnyFunSuite {
 
   private val noEnv: String => Option[String] = _ => None
 
-  private def cloudsolr: String = new String(
-    java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/config/cloudsolr.conf")), "UTF-8")
+  private def cloudsolr: String =
+    ReferenceConf.read(ReferenceConf.path("config/cloudsolr.conf"))
 
   test("cloudsolr.conf: morphlines.collection override satisfies ${collection}, ${?zkHost} drops") {
     val root = Hocon.resolve(Hocon.parse(cloudsolr),
@@ -41,9 +40,7 @@ class HoconResolveSpec extends AnyFunSuite {
   }
 
   test("producer.conf: ${?CONNECT_KAFKA_REST_URL} resolves via the env hook or drops") {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
-      .get("/root/reference/src/test/resources/com/github/epheatt/kafka/" +
-        "connect/morphlines/producer.conf")), "UTF-8")
+    val text = ReferenceConf.read(ReferenceConf.testConf("producer.conf"))
     def props(root: com.fasterxml.jackson.databind.JsonNode) = {
       val commands = root.get("morphlines").get(0).get("commands")
       (0 until commands.size).map(commands.get)
@@ -93,8 +90,8 @@ class HoconResolveSpec extends AnyFunSuite {
   }
 }
 
-/** HOCON control-flow parity: `if`/`tryRules`/`pipe` nested command blocks
-  * compile from `.conf` text the way `fromJson` compiles their JSON shapes.
+/** HOCON control flow: `if`/`tryRules`/`pipe` nested command blocks
+  * compile from `.conf` text and apply the reference's branch semantics.
   */
 class HoconControlFlowSpec extends SparkSpec {
   import spark.implicits._
@@ -139,6 +136,30 @@ class HoconControlFlowSpec extends SparkSpec {
       (1L, "big", "buy", "yes"),
       (2L, "small", "other", "yes"),
       (3L, "small", "buy", "yes")))
+  }
+
+  test("tryRules catchAll and dropRecord {where} compile from .conf") {
+    val fallback =
+      """morphlines : [
+        |  { id : fallback
+        |    commands : [
+        |      { tryRules {
+        |          rules : [
+        |            { condition : "et = 'purchase'"
+        |              commands : [ { setValues { rule : p } } ] }
+        |            { condition : "v > 150"
+        |              commands : [ { setValues { rule : hv } } ] }
+        |          ]
+        |          catchAll : [ { setValues { rule : def } } ]
+        |      } }
+        |      { dropRecord { where : "v > 400" } }
+        |    ] } ]""".stripMargin
+    val pipe = PipelineSpec.fromHocon(fallback, "fallback")
+    val input = Seq((1, "purchase", 200.0), (2, "view", 170.0),
+      (3, "view", 10.0), (4, "view", 500.0)).toDF("id", "et", "v")
+    val out = pipe(input).select("id", "rule")
+      .as[(Int, String)].collect().toMap
+    assert(out == Map(1 -> "p", 2 -> "hv", 3 -> "def"))
   }
 
   test("nested log commands get unique observation names across branches") {

@@ -47,7 +47,7 @@ class ProductionConfSpec extends SparkSpec {
       docs.foreach(d => ProductionConfSpec.solrDocs.add(coll -> d))
 
     val pipe = PipelineSpec.fromHoconFile(
-      "/root/reference/config/cloudsolr.conf", "cloudsolr",
+      ReferenceConf.path("config/cloudsolr.conf"), "cloudsolr",
       settings = Map("morphlines.collection" -> "collection1"), env = noEnv)
 
     val input = Seq(
@@ -79,9 +79,7 @@ class ProductionConfSpec extends SparkSpec {
   test("producer.conf 'rest' morphline compiles verbatim and produces avro values") {
     resetEnvs()
     Sinks.KafkaEnv.sender = ms => ms.foreach(ProductionConfSpec.kafkaMsgs.add)
-    val refDir =
-      "/root/reference/src/test/resources/com/github/epheatt/kafka/connect/morphlines"
-    val pipe = PipelineSpec.fromHoconFile(s"$refDir/producer.conf", "rest",
+    val pipe = PipelineSpec.fromHoconFile(ReferenceConf.testConf("producer.conf"), "rest",
       env = k => if (k == "CONNECT_KAFKA_REST_URL")
         Some("http://localhost:8082") else None)
 
@@ -104,10 +102,8 @@ class ProductionConfSpec extends SparkSpec {
   test("producer.conf 'native' morphline: optional env substitutions drop cleanly") {
     resetEnvs()
     Sinks.KafkaEnv.sender = ms => ms.foreach(ProductionConfSpec.kafkaMsgs.add)
-    val refDir =
-      "/root/reference/src/test/resources/com/github/epheatt/kafka/connect/morphlines"
     // no env at all: ${?CONNECT_BOOTSTRAP_SERVERS} etc drop, compile succeeds
-    val pipe = PipelineSpec.fromHoconFile(s"$refDir/producer.conf", "native",
+    val pipe = PipelineSpec.fromHoconFile(ReferenceConf.testConf("producer.conf"), "native",
       env = noEnv)
     val input = Seq(("""{"x": 1}""", "t2", 0, 0L))
       .toDF("value", "topic", "partition", "offset")
@@ -131,7 +127,7 @@ class ProductionConfSpec extends SparkSpec {
       docs.foreach(d => store.put(d("id").asInstanceOf[String], d))
 
     val pipe = PipelineSpec.fromHoconFile(
-      "/root/reference/config/cloudsolr.conf", "cloudsolr",
+      ReferenceConf.path("config/cloudsolr.conf"), "cloudsolr",
       settings = Map("morphlines.collection" -> "collection1"), env = noEnv)
 
     // file-based stream in the Kafka envelope shape (EP3 pattern); the sink
@@ -194,7 +190,7 @@ class ProductionConfSpec extends SparkSpec {
           "t2-avro-value" -> Seq(personSchema)))
 
     val pipe = PipelineSpec.fromHoconFile(
-      "/root/reference/config/morphlines.conf", "jsontoavropublish",
+      ReferenceConf.path("config/morphlines.conf"), "jsontoavropublish",
       env = k => Map(
         "CONNECT_SCHEMA_REGISTRY_URL" -> "mock://registry",
         "CONNECT_KAFKA_REST_URL" -> "mock://rest").get(k))
@@ -290,7 +286,7 @@ class ProductionConfSpec extends SparkSpec {
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}"
       val pipe = PipelineSpec.fromHoconFile(
-        "/root/reference/config/morphlines.conf", "jsontoavropublish",
+        ReferenceConf.path("config/morphlines.conf"), "jsontoavropublish",
         env = k => Map(
           "CONNECT_SCHEMA_REGISTRY_URL" -> url,
           "CONNECT_KAFKA_REST_URL" -> "mock://rest").get(k))
@@ -314,7 +310,7 @@ class ProductionConfSpec extends SparkSpec {
     // and kafkaProducer skips the row (no schema to encode with)
     Sinks.KafkaEnv.sender = ms => ms.foreach(ProductionConfSpec.kafkaMsgs.add)
     val pipe = PipelineSpec.fromHoconFile(
-      "/root/reference/config/morphlines.conf", "jsontoavropublish",
+      ReferenceConf.path("config/morphlines.conf"), "jsontoavropublish",
       env = k => Map(
         "CONNECT_SCHEMA_REGISTRY_URL" -> "mock://registry",
         "CONNECT_KAFKA_REST_URL" -> "mock://rest").get(k))
@@ -357,9 +353,7 @@ class ProductionConfSpec extends SparkSpec {
       (500, """{"error_code":50003,"message":"transient"}"""),
       (200, """{"offsets":[{"partition":0,"offset":0}]}"""))) { (url, hits) =>
       Sinks.KafkaEnv.sender = graft.io.HttpSenders.restProxyKafkaSender(url)
-      val refDir =
-        "/root/reference/src/test/resources/com/github/epheatt/kafka/connect/morphlines"
-      val pipe = PipelineSpec.fromHoconFile(s"$refDir/producer.conf", "rest",
+      val pipe = PipelineSpec.fromHoconFile(ReferenceConf.testConf("producer.conf"), "rest",
         env = k => if (k == "CONNECT_KAFKA_REST_URL") Some(url) else None)
       val input = Seq(("""{"firstName": "example", "age": 27}""", "test", 0, 0L))
         .toDF("value", "topic", "partition", "offset")
@@ -385,7 +379,7 @@ class ProductionConfSpec extends SparkSpec {
         Sinks.SolrEnv.sender =
           graft.io.HttpSenders.solrHttpSender(url, commitWithinMs = 1000)
         val pipe = PipelineSpec.fromHoconFile(
-          "/root/reference/config/cloudsolr.conf", "cloudsolr",
+          ReferenceConf.path("config/cloudsolr.conf"), "cloudsolr",
           settings = Map("morphlines.collection" -> "collection1"), env = noEnv)
         val input = Seq(
           ("""{"name": "quickstart-text-file-source", "config": {"topic":"twitter"}}""",

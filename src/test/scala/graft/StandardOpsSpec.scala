@@ -62,43 +62,6 @@ class StandardOpsSpec extends SparkSpec {
     assert(r.toSeq == Seq("DE", "2017-01-20", "WARN", "9"))
   }
 
-  test("JSON pipeline spec compiles and runs (morphline-config analogue)") {
-    val spec =
-      """{ "id": "readjson",
-        |  "commands": [
-        |    { "command": "readJson", "field": "value",
-        |      "schema": "firstName STRING, lastName STRING, email STRING, age INT" },
-        |    { "command": "extractJsonPaths",
-        |      "paths": "first_name:firstName, age_x:age" },
-        |    { "command": "dropRecord", "where": "age_x > 100" } ] }""".stripMargin
-    val pipe = graft.pipeline.PipelineSpec.fromJson(spec)
-    assert(pipe.id == "readjson")
-    val out = pipe(Seq(personJson).toDF("value"))
-      .select("first_name", "age_x").head()
-    assert(out.getString(0) == "example" && out.getInt(1) == 27)
-  }
-
-  test("nested if/tryRules control flow compiles from a JSON spec") {
-    val spec =
-      """{ "id": "routing", "commands": [
-        |  { "command": "if", "condition": "v > 100",
-        |    "then": [ { "command": "setValues", "tier": "high" } ],
-        |    "else": [ { "command": "setValues", "tier": "low" } ] },
-        |  { "command": "tryRules", "rules": [
-        |      { "condition": "et = 'purchase'",
-        |        "commands": [ { "command": "setValues", "rule": "p" } ] },
-        |      { "condition": "v > 150",
-        |        "commands": [ { "command": "setValues", "rule": "hv" } ] } ],
-        |    "catchAll": [ { "command": "setValues", "rule": "def" } ] } ] }"""
-        .stripMargin
-    val pipe = graft.pipeline.PipelineSpec.fromJson(spec)
-    val df = Seq((1, "purchase", 200.0), (2, "view", 170.0), (3, "view", 10.0))
-      .toDF("id", "et", "v")
-    val out = pipe(df).select("id", "tier", "rule")
-      .as[(Int, String, String)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(out == Map(1 -> ("high", "p"), 2 -> ("high", "hv"), 3 -> ("low", "def")))
-  }
-
   test("unknown command fails at compile with known names listed") {
     val e = intercept[IllegalArgumentException](
       StandardOps.compile("bad", Seq("nope" -> Map())))

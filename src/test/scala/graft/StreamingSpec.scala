@@ -951,6 +951,44 @@ class StreamingSpec extends SparkSpec {
           s"extra=${(dis diff ordered).take(3)}")
     }
   }
+
+  test("StreamMetrics: RocksDB with row tracking off records peak state " +
+      "rows as untracked (n/a), not as a count") {
+    // Two state operators (dedup + aggregate) under the gates' own stream
+    // conf (RocksDB, changelog checkpointing), row tracking pinned per run.
+    val inDir = tempDir("graft-smetrics-in")
+    Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "k")
+      .coalesce(1).write.mode("overwrite").parquet(inDir.toString)
+    def peakRows(track: Boolean): (Option[Long], String) = {
+      val name = s"smetrics_track_$track"
+      graft.Sessions.rocksdbTrackRowsForce = Some(track)
+      try {
+        val q = graft.queries.CorpusQueries.startWithStreamConf(spark) {
+          spark.readStream.schema("id LONG, k STRING").parquet(inDir.toString)
+            .dropDuplicates("id").groupBy("k").count()
+            .writeStream.format("memory").queryName(s"${name}_sink")
+            .outputMode("complete")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+        }
+        q.awaitTermination()
+        graft.queries.StreamMetrics.record(s"${name}_sink", q)
+      } finally graft.Sessions.rocksdbTrackRowsForce = None
+      val rows = graft.queries.StreamMetrics.summary
+        .collectFirst { case (`name`, _, sr, _) => sr }
+      val line = graft.queries.StreamMetrics.summaryLines
+        .find(_.startsWith(name + " "))
+      assert(rows.isDefined && line.isDefined, s"$name not recorded")
+      (rows.get, line.get)
+    }
+    val (untracked, untrackedLine) = peakRows(track = false)
+    assert(untracked.isEmpty, s"untracked peak read as $untracked")
+    assert(raw"stateRows=\s*n/a ".r.findFirstIn(untrackedLine).isDefined,
+      untrackedLine)
+    // tracked: 3 distinct ids in the dedup state + 2 keys in the aggregate
+    val (tracked, _) = peakRows(track = true)
+    assert(tracked.contains(5L), s"tracked peak $tracked")
+  }
 }
 
 /** Static collector for the foreach-sink test (ForeachWriter is serialized
