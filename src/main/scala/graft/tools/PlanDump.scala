@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence capture: write `explain("formatted")` for
   * named gate queries to files (`plans/r21/<query>_<tag>.txt`), so plan
   * claims in OPTIMIZATION_r*.md are checkable without running Spark.
@@ -19,13 +17,7 @@ object PlanDump {
       "usage: PlanDump <outDir> <tag> <dataDir> <query>...")
     val (outDir, tag, dir) = (args(0), args(1), args(2))
     val names = args.drop(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- names) {

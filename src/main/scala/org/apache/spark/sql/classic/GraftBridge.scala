@@ -40,6 +40,14 @@ object GraftBridge {
       errorClass = "_LEGACY_ERROR_TEMP_3105",
       messageParameters = Map("message" -> msg))
 
+  /** Block until Spark's listener bus has delivered every event posted
+    * so far (TimeoutException after 10 s), so a listener's counts are
+    * complete when read. `listenerBus` is `private[spark]` — same
+    * re-export rationale as the rest of this shim.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Apply a SparkSessionExtensions configurator to a fresh registry and
     * return the registered function names — lets a test exercise the
     * `injectFunction` → session-state wiring without building a second

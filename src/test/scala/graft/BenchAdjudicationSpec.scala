@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contracts for the bench record's self-adjudication layer (r18 VERDICT
-  * item 1) and the measured-scan-class listener (item 2): the per-round
+  * item 1) and the work-counter regression gate: the per-round
   * BENCH_r{N}.json must be readable standalone — a judge classifies a
   * contended-host sample from the record's own fields, without PLANS/
   * commit archaeology — and roll updates must freeze under non-default
@@ -15,47 +15,22 @@ class BenchAdjudicationSpec extends AnyFunSuite {
   test("verdictLine: clean sample when probes flat and shift small") {
     assert(Bench.verdictLine(fullBoard = true, nQueries = 219,
       cfgDefault = true, shift = 1.05, probeMin = 0.4,
-      probeMax = 0.45, probe2Min = 0.42, probe2Max = 0.48,
-      quietBest = 94.3) == "clean sample")
+      probeMax = 0.45, quietBest = 94.3) == "clean sample")
   }
 
   test("verdictLine: contended sample names the probe swing and quiet best") {
     val v = Bench.verdictLine(fullBoard = true, nQueries = 219,
       cfgDefault = true, shift = 1.499, probeMin = 0.44,
-      probeMax = 0.76, probe2Min = 0.45, probe2Max = 0.50,
-      quietBest = 94.3)
+      probeMax = 0.76, quietBest = 94.3)
     assert(v.contains("contended-host sample"))
     assert(v.contains("probe 0.44-0.76s"))
-    assert(!v.contains("probe2"), "flat probe2 must not be cited")
     assert(v.contains("quiet same-commit best 94.3s"))
-  }
-
-  test("verdictLine: probe2-only swing names probe2, not the flat probe-1 range") {
-    // ADVICE r19: the live r19 record cited "probe 0.31-0.40s" (1.30x,
-    // flat-looking) when probe 2 alone broke flatness
-    val v = Bench.verdictLine(fullBoard = true, nQueries = 219,
-      cfgDefault = true, shift = 1.28, probeMin = 0.31,
-      probeMax = 0.40, probe2Min = 0.30, probe2Max = 0.62,
-      quietBest = -1.0)
-    assert(v.contains("contended-host sample"))
-    assert(v.contains("probe2 0.30-0.62s"))
-    assert(!v.contains("probe 0.31-0.40s"), "flat probe-1 must not be cited")
-  }
-
-  test("verdictLine: both series swinging cites both") {
-    val v = Bench.verdictLine(fullBoard = true, nQueries = 219,
-      cfgDefault = true, shift = 1.5, probeMin = 0.44,
-      probeMax = 0.76, probe2Min = 0.30, probe2Max = 0.62,
-      quietBest = -1.0)
-    assert(v.contains("probe 0.44-0.76s"))
-    assert(v.contains("probe2 0.30-0.62s"))
   }
 
   test("verdictLine: contended flat-probe sample cites the shift; no quiet sample is said so") {
     val v = Bench.verdictLine(fullBoard = true, nQueries = 219,
       cfgDefault = true, shift = 1.6, probeMin = 0.4,
-      probeMax = 0.42, probe2Min = 0.44, probe2Max = 0.46,
-      quietBest = -1.0)
+      probeMax = 0.42, quietBest = -1.0)
     assert(v.contains("global_shift 1.60x"))
     assert(v.contains("no quiet same-commit sample"))
   }
@@ -63,12 +38,10 @@ class BenchAdjudicationSpec extends AnyFunSuite {
   test("verdictLine: partial and non-default-config runs are labeled, never 'clean sample'") {
     assert(Bench.verdictLine(fullBoard = false, nQueries = 12,
       cfgDefault = true, shift = 1.0, probeMin = 0.4,
-      probeMax = 0.4, probe2Min = 0.4, probe2Max = 0.4,
-      quietBest = -1).startsWith("partial run (12 queries"))
+      probeMax = 0.4, quietBest = -1).startsWith("partial run (12 queries"))
     assert(Bench.verdictLine(fullBoard = true, nQueries = 219,
       cfgDefault = false, shift = 1.0, probeMin = 0.4,
-      probeMax = 0.4, probe2Min = 0.4, probe2Max = 0.4,
-      quietBest = -1).startsWith("non-default execution config"))
+      probeMax = 0.4, quietBest = -1).startsWith("non-default execution config"))
   }
 
   test("quietBestTotal: same commit, flat, small shift only") {
@@ -83,19 +56,17 @@ class BenchAdjudicationSpec extends AnyFunSuite {
   }
 
   test("samples round-trip through BENCH.out.json (full per-sample schema)") {
-    // r19 VERDICT item 2: each entry is standalone — verdict,
-    // probe_version, sf, probe-2 spread, and the production stream-rps
-    // summary all round-trip, so a probe-version caveat never lives only
-    // in PLANS prose again
+    // r19 VERDICT item 2: each entry is standalone — verdict, sf, probe
+    // spread and the production stream-rps summary all round-trip
     val ss = Seq(
       Bench.Sample("abc1234", 94.301, 1.0214, flat = true, 0.2714, 0.3101,
-        0.4012, 0.4409, 3, "/root/testdata/sf0.1", "clean sample",
+        "sf0.1", "clean sample",
         Map("x_stream_window_append" -> 57274.0,
           "x_stream_session_disorder" -> 43485.0)),
       Bench.Sample("abc1234", 141.02, 1.499, flat = false, 0.4418, 0.7612,
-        0.4101, 0.9003, 3, "/root/testdata/sf0.1",
-        "contended-host sample (probe 0.44-0.76s, probe2 0.41-0.90s " +
-          "within the run); quiet same-commit best 94.3s",
+        "sf0.1",
+        "contended-host sample (probe 0.44-0.76s within the run); " +
+          "quiet same-commit best 94.3s",
         Map("x_stream_window_append" -> 41002.0)))
     val json = s"""{"metric":"total","value":1.0${
       ss.map(Bench.sampleJson).mkString(",\"samples\":[", ",", "]")}}"""
@@ -107,11 +78,9 @@ class BenchAdjudicationSpec extends AnyFunSuite {
       assert(back.map(_.flat) == Seq(true, false))
       assert(math.abs(back.head.total - 94.301) < 1e-9)
       assert(math.abs(back(1).probeMax - 0.7612) < 1e-9)
-      assert(math.abs(back.head.probe2Max - 0.4409) < 1e-9)
-      assert(back.map(_.probeVer) == Seq(3, 3))
-      assert(back.map(_.sf).distinct == Seq("/root/testdata/sf0.1"))
+      assert(back.map(_.sf).distinct == Seq("sf0.1"))
       assert(back.head.verdict == "clean sample")
-      assert(back(1).verdict.contains("probe2 0.41-0.90s"))
+      assert(back(1).verdict.contains("probe 0.44-0.76s"))
       assert(back.head.streamRps("x_stream_window_append") == 57274.0)
       assert(back.head.streamRps("x_stream_session_disorder") == 43485.0)
       assert(back(1).streamRps == Map("x_stream_window_append" -> 41002.0))
@@ -127,8 +96,6 @@ class BenchAdjudicationSpec extends AnyFunSuite {
       val back = Bench.readPrevSamples(f)
       assert(back.size == 1)
       assert(back.head.commit == "30faf2e")
-      assert(back.head.probe2Min == -1.0 && back.head.probe2Max == -1.0)
-      assert(back.head.probeVer == 0) // marks the entry pre-versioning
       assert(back.head.sf == "" && back.head.verdict == "")
       assert(back.head.streamRps.isEmpty)
     } finally java.nio.file.Files.deleteIfExists(f)
@@ -181,8 +148,156 @@ class BenchAdjudicationSpec extends AnyFunSuite {
       "explicitly naming the default iteration count stays eligible")
   }
 
-  test("ScanTimeListener: no observed tasks yields None, not a class flip") {
-    val lis = new Bench.ScanTimeListener
-    assert(lis.scanFraction("q_never_ran").isEmpty)
+  // ---- the work-counter gate, on plain-map inputs
+
+  private val floor = Bench.workFloor
+  /** One query's counters; every counter defaults to its floor, where a
+    * value equal to the roll reads ratio 1.0. */
+  private def w(cpu: Double = floor("cpu_ms"),
+                in: Double = floor("input_bytes"),
+                rows: Double = floor("input_rows"),
+                shuffle: Double = floor("shuffle_bytes"),
+                spill: Double = 0.0,
+                tasks: Double = floor("tasks")): Map[String, Double] =
+    Map("cpu_ms" -> cpu, "input_bytes" -> in, "input_rows" -> rows,
+      "shuffle_bytes" -> shuffle,
+      "spill_bytes" -> spill, "tasks" -> tasks)
+  /** A board of `n` flat queries whose CPU moved by `cpuRatio`. */
+  private def board(n: Int, cpuRatio: Double)
+      : (Map[String, Map[String, Double]], Map[String, Map[String, Double]]) = {
+    val qs = (1 to n).map(i => f"q_$i%02d")
+    (qs.map(_ -> w(cpu = 10000.0 * cpuRatio)).toMap,
+      qs.map(_ -> w(cpu = 10000.0)).toMap)
+  }
+
+  test("workGate: a task-CPU rise flags, after the session shift is divided out") {
+    val (cur, roll) = board(12, 1.0)
+    val g = Bench.workGate(cur + ("q_slow" -> w(cpu = 20000.0)),
+      roll + ("q_slow" -> w(cpu = 10000.0)), eligible = true)
+    assert(g.nRatios == 13 && g.shift == 1.0)
+    assert(g.suspects == Seq(("q_slow", "cpu_ms", 2.0)))
+  }
+
+  test("workGate: a byte rise flags, and bytes are not shift-corrected") {
+    // a host whose CPU ratios all read 2x: the shift absorbs them, but a
+    // 1.5x input-byte rise is work, not host, and still flags
+    val (cur, roll) = board(12, 2.0)
+    val g = Bench.workGate(
+      cur + ("q_scan" -> w(cpu = 20000.0, in = 30.0e6)),
+      roll + ("q_scan" -> w(cpu = 10000.0, in = 20.0e6)), eligible = true)
+    assert(g.shift == 2.0 && g.shiftBase == 2.0)
+    assert(g.suspects.map(_._1) == Seq("q_scan"))
+    assert(g.suspects.head._2 == "input_bytes")
+    assert(math.abs(g.suspects.head._3 - 1.5) < 1e-9)
+  }
+
+  test("workGate: a rise below the floor does not flag") {
+    // 10x CPU and 10x shuffle, both still under their floors; tasks up
+    // to just under 1.3x of the floor
+    val g = Bench.workGate(
+      Map("q_tiny" -> w(cpu = floor("cpu_ms") / 2,
+        shuffle = floor("shuffle_bytes") / 2, tasks = floor("tasks") * 1.29)),
+      Map("q_tiny" -> w(cpu = floor("cpu_ms") / 20,
+        shuffle = floor("shuffle_bytes") / 20, tasks = 1.0)),
+      eligible = true)
+    assert(g.suspects.isEmpty)
+  }
+
+  test("workGate: a first-seen query is never a suspect") {
+    val g = Bench.workGate(Map("q_new" -> w(cpu = 1.0e9, in = 1.0e12)),
+      Map("q_old" -> w()), eligible = true)
+    assert(g.suspects.isEmpty && g.nRatios == 0)
+  }
+
+  test("workGate and rollWork: a non-default config freezes the rolls and mutes the gate") {
+    val prev = Map("q_a" -> w(cpu = 10000.0))
+    val cur = Map("q_a" -> w(cpu = 5000.0), "q_b" -> w())
+    assert(Bench.rollWork(prev, cur, eligible = false) == prev)
+    assert(Bench.rollWork(prev, cur, eligible = true) ==
+      Map("q_a" -> w(cpu = 5000.0), "q_b" -> w()))
+    val g = Bench.workGate(Map("q_a" -> w(cpu = 90000.0)), prev,
+      eligible = false)
+    assert(g.suspects.isEmpty && g.nRatios == 0 && g.shift == 1.0)
+  }
+
+  test("workGate: fewer than 10 CPU ratios means no shift division") {
+    // 9 queries at 1.6x: the median is the board's own ratio, so it must
+    // not be divided out; at 12 queries it is
+    val (cur9, roll9) = board(9, 1.6)
+    val g9 = Bench.workGate(cur9, roll9, eligible = true)
+    assert(g9.shift == 1.6 && g9.shiftBase == 1.0)
+    assert(g9.suspects.size == 9)
+    val (cur12, roll12) = board(12, 1.6)
+    val g12 = Bench.workGate(cur12, roll12, eligible = true)
+    assert(g12.shiftBase == 1.6 && g12.suspects.isEmpty)
+  }
+
+  test("a parent-format BENCH.out.json (probe-2 samples, no work roll) reads and seeds the roll") {
+    val parent = """{"metric":"total","value":85.9,"queries":{"q_a":0.5},""" +
+      """"rollmin":{"q_a":0.4},"rollmin_norm_c":{"q_a":1.2},""" +
+      """"roll_probe1":{"q_a":0.3},"roll_probe2":{"q_a":0.2},""" +
+      """"probe_class":{"q_a":"shuffle"},"global_shift":1.03,""" +
+      """"probe_version":3,"samples":[{"commit":"14639b8","total":99.636,""" +
+      """"shift":1.0293,"flat":false,"probe_min":0.334,"probe_max":0.4199,""" +
+      """"probe2_min":0.1403,"probe2_max":0.2692,"probe_version":3,""" +
+      """"sf":"sf0.1","verdict":"contended-host sample",""" +
+      """"stream_rps":{"x_stream_window_append":44729}}]}"""
+    val f = java.nio.file.Files.createTempFile("bench-parent", ".json")
+    try {
+      java.nio.file.Files.write(f, parent.getBytes("UTF-8"))
+      val samples = Bench.readPrevSamples(f)
+      assert(samples.map(_.commit) == Seq("14639b8"))
+      assert(samples.head.probeMax == 0.4199)
+      assert(samples.head.streamRps == Map("x_stream_window_append" -> 44729.0))
+      val prevWork = Bench.readPrevWork(f)
+      assert(prevWork.isEmpty)
+      val cur = Map("q_a" -> w(cpu = 5000.0))
+      assert(Bench.rollWork(prevWork, cur, eligible = true) == cur)
+      assert(Bench.workGate(cur, prevWork, eligible = true).suspects.isEmpty)
+    } finally java.nio.file.Files.deleteIfExists(f)
+  }
+
+  test("workGate: a spill rise from 0 to above the floor flags") {
+    val g = Bench.workGate(Map("q_sort" -> w(spill = floor("spill_bytes") * 2)),
+      Map("q_sort" -> w(spill = 0.0)), eligible = true)
+    assert(g.suspects == Seq(("q_sort", "spill_bytes", 2.0)))
+  }
+
+  test("warmMin: each counter's minimum over the warm iterations; the cold one is excluded") {
+    val cold = w(cpu = 100.0, in = 1.0, tasks = 5.0)
+    val warm1 = w(cpu = 3000.0, in = 10.0, tasks = 40.0)
+    val warm2 = w(cpu = 2500.0, in = 12.0, tasks = 40.0)
+    val m = Bench.warmMin(Seq(cold, warm1, warm2))
+    assert(m("cpu_ms") == 2500.0 && m("input_bytes") == 10.0 && m("tasks") == 40.0)
+    assert(Bench.warmMin(Seq(cold)).isEmpty, "one iteration has no warm runs")
+  }
+
+  test("boardShift: a persisting shift with flat probes fires") {
+    val g = Bench.WorkGate(Nil, shift = 1.6, nRatios = 200)
+    assert(Bench.boardShift(g, prevShift = 1.7, probeFlat = true))
+  }
+
+  test("boardShift: a first shifted session, a swinging probe or a small run stays quiet") {
+    val g = Bench.WorkGate(Nil, shift = 1.6, nRatios = 200)
+    assert(!Bench.boardShift(g, prevShift = 1.1, probeFlat = true))
+    assert(!Bench.boardShift(g, prevShift = 1.7, probeFlat = false))
+    assert(!Bench.boardShift(g.copy(nRatios = 9), prevShift = 1.7,
+      probeFlat = true))
+  }
+
+  test("rpsSuspects: an append gate under 0.7x its rolling max fires") {
+    val g = Bench.WorkGate(Nil, shift = 1.0, nRatios = 200)
+    val s = Bench.rpsSuspects(g,
+      Map("x_stream_window_append" -> 30000.0, "x_stream_knn" -> 1.0),
+      Map("x_stream_window_append" -> 50000.0, "x_stream_knn" -> 4.0))
+    assert(s == Seq("x_stream_window_append" -> 0.6))
+  }
+
+  test("rpsSuspects: shift correction, non-production gates and small runs stay quiet") {
+    val rps = Map("x_stream_window_append" -> 30000.0, "x_stream_knn" -> 1.0)
+    val roll = Map("x_stream_window_append" -> 50000.0, "x_stream_knn" -> 4.0)
+    // a 1.3x CPU shift corrects 30k up to 39k: above 0.7 x 50k
+    assert(Bench.rpsSuspects(Bench.WorkGate(Nil, 1.3, 200), rps, roll).isEmpty)
+    assert(Bench.rpsSuspects(Bench.WorkGate(Nil, 1.0, 9), rps, roll).isEmpty)
   }
 }
